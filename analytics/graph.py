@@ -864,7 +864,10 @@ def link_ppr(spark: SparkSession, sf: str) -> DataFrame:
     4 power iterations of pr' = (1-d)*reset + d * Σ pr(u)/deg(u) with the
     reset mass concentrated on the seeds, returning nodes with non-zero
     rounded score (unreached nodes are exactly 0.0 — the seed-proximity
-    frontier after 4 hops, cf. link_bfs_depth's ring cutoff).
+    frontier after 4 hops, cf. link_bfs_depth's ring cutoff).  Each seed
+    carries mass 1.0 (it starts at 1.0 and gets 1-d reset per round, not
+    scaled by 1/|seeds|), so the scores are per-seed mass, not
+    probabilities: they sum to at most the seed count, not to 1.
 
     Parity device: identical to link_pagerank — the per-round arithmetic
     tree is the same fixed shape in both engines, the reset CASE is

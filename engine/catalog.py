@@ -72,7 +72,9 @@ class SnapshotCatalog:
 
         ``snapshots``/``appends``: table -> {"path": str, "rows": int}.
         Snapshot tables not written this epoch are carried forward from the
-        previous manifest.  The ``os.rename`` below is the commit point.
+        previous manifest.  The ``os.rename`` below is the commit point; the
+        fsync of ``manifests/`` after it makes the rename itself durable, so
+        a committed epoch survives power loss, not only a process kill.
         """
         prev = self.last_epoch()
         carried = {}
@@ -92,6 +94,11 @@ class SnapshotCatalog:
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, self._manifest_path(epoch))  # THE atomic commit point
+        dir_fd = os.open(os.path.dirname(tmp), os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
 
     def discard_uncommitted(self) -> None:
         """K2 resume hygiene: drop staging for any epoch beyond the last commit."""
@@ -130,11 +137,10 @@ class SnapshotCatalog:
     def cell_key(status: str, bucket: int) -> str:
         return f"{status}/{bucket}"
 
-    def frontier_parts(self, epoch: int | None = None) -> dict | None:
-        """Cell map of the committed frontier, or None for a legacy
-        whole-table snapshot (pre-cell catalogs; migrated on next epoch)."""
+    def frontier_parts(self, epoch: int | None = None) -> dict:
+        """Cell map of the committed frontier."""
         ep = self.last_epoch() if epoch is None else epoch
-        return self.manifest(ep)["snapshots"]["frontier"].get("parts")
+        return self.manifest(ep)["snapshots"]["frontier"]["parts"]
 
     def read_parts(
         self,

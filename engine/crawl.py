@@ -36,7 +36,7 @@ from engine import seen as seenmod
 from engine.canonicalize import path_expr
 from engine.catalog import SnapshotCatalog
 from engine.fetch import fetch_parse
-from engine.frontier import pop_frontier, retry_transition
+from engine.frontier import apply_transitions, pop_frontier, retry_transition
 from engine.lineage import partition_lineage, write_metrics_parquet
 from engine.parse import extract_candidates
 from engine.robots import fetch_robots, robots_gate
@@ -65,9 +65,7 @@ class CrawlEngine:
         filter_nbits: int = seenmod.DEFAULT_NBITS,
         filter_nhash: int = seenmod.DEFAULT_NHASH,
         use_robots: bool = True,
-        use_seen_filter: bool = True,
         default_k: int = 1,
-        partition_frontier_by_status: bool = True,  # retained arg: cells always partition by (status, host_bucket) now
         bench_budget: int | None = None,
         filter_kind: str = "bloom",
         max_cell_dirs: int = 16,
@@ -80,7 +78,6 @@ class CrawlEngine:
         self.filter_nbits = filter_nbits
         self.filter_nhash = filter_nhash
         self.use_robots = use_robots
-        self.use_seen_filter = use_seen_filter
         self.default_k = default_k
         self.bench_budget = bench_budget
         self.filter_kind = filter_kind
@@ -133,26 +130,24 @@ class CrawlEngine:
             self._write(self.spark.createDataFrame([], ROBOTS_RULES), rob_path)
 
         n_frontier = frontier.count()
-        snapshots = {
-            "frontier": {"rows": n_frontier, "parts": parts0},
-            "politeness_budgets": {"path": bud_path, "rows": budgets.count()},
-            "robots_rules": {"paths": [rob_path], "rows": n_rules},
-        }
-        if self.use_seen_filter:
-            blobs = seenmod.init_filter(
-                self.spark,
-                frontier.select("url_hash"),
-                self.n_filter_parts,
-                self.filter_nbits,
-                self.filter_nhash,
-                kind=self.filter_kind,
-            )
-            sf_path = cat.stage_path(0, "seen_filter")
-            self._write(blobs, sf_path)
-            snapshots["seen_filter"] = {"path": sf_path, "rows": self.n_filter_parts}
+        blobs = seenmod.init_filter(
+            self.spark,
+            frontier.select("url_hash"),
+            self.n_filter_parts,
+            self.filter_nbits,
+            self.filter_nhash,
+            kind=self.filter_kind,
+        )
+        sf_path = cat.stage_path(0, "seen_filter")
+        self._write(blobs, sf_path)
         cat.commit(
             0,
-            snapshots,
+            {
+                "frontier": {"rows": n_frontier, "parts": parts0},
+                "politeness_budgets": {"path": bud_path, "rows": budgets.count()},
+                "robots_rules": {"paths": [rob_path], "rows": n_rules},
+                "seen_filter": {"path": sf_path, "rows": self.n_filter_parts},
+            },
             appends={},
             meta={
                 "cfg": repr(self.cfg),
@@ -207,25 +202,19 @@ class CrawlEngine:
         budgets = self._budgets
         prev_epoch = cat.last_epoch()
         prev_manifest = cat.manifest(prev_epoch)
-        prev_meta = prev_manifest.get("meta", {})
-        prev_rows = prev_meta.get("frontier_rows")
-        prev_pending = prev_meta.get("pending")
-        prev_robots_rows = prev_meta.get("robots_rows")
+        prev_meta = prev_manifest["meta"]
+        prev_rows = prev_meta["frontier_rows"]
+        prev_pending = prev_meta["pending"]
+        prev_robots_rows = prev_meta["robots_rows"]
 
-        # SC3 scan prune: with a cell-granular snapshot the pending scan is
-        # pruned at the MANIFEST — terminal (done/failed/disallowed) cells
-        # are never even listed, let alone read.  Legacy whole-table
-        # snapshots fall back to a status filter (and are migrated to cells
-        # by this epoch's commit).
-        parts = prev_manifest["snapshots"]["frontier"].get("parts")
-        if parts is not None:
-            frontier = cat.read_parts(parts, schema=FRONTIER)
-            pending = cat.read_parts(parts, status="pending", schema=FRONTIER)
-            if pending is None:
-                pending = spark.createDataFrame([], FRONTIER)
-        else:
-            frontier = cat.read_snapshot("frontier")
-            pending = frontier.where(F.col("status") == "pending")
+        # SC3 scan prune: the frontier snapshot is cell-granular, so the
+        # pending scan is pruned at the MANIFEST — terminal
+        # (done/failed/disallowed) cells are never even listed, let alone read.
+        parts = prev_manifest["snapshots"]["frontier"]["parts"]
+        frontier = cat.read_parts(parts, schema=FRONTIER)
+        pending = cat.read_parts(parts, status="pending", schema=FRONTIER)
+        if pending is None:
+            pending = spark.createDataFrame([], FRONTIER)
 
         # --- R2 gate; R1 ran AHEAD (init_run / previous epoch's overlap) ---
         # The committed robots table already covers every host that has
@@ -237,23 +226,20 @@ class CrawlEngine:
         robots_paths: list[str] = []
         orig_robots_paths: list[str] = []
         if self.use_robots:
-            entry = prev_manifest["snapshots"]["robots_rules"]
-            robots_paths = list(entry.get("paths") or [entry["path"]])
+            robots_paths = list(prev_manifest["snapshots"]["robots_rules"]["paths"])
             orig_robots_paths = list(robots_paths)
             robots = spark.read.schema(ROBOTS_RULES).parquet(*robots_paths)
-            if not prev_meta.get("robots_complete"):
-                # legacy catalog (manifests committed before the prefetch
-                # invariant): acquire rules for pending hosts synchronously
-                # ONCE; this commit marks the invariant, later epochs stay
-                # on the fast path.  persist-before-count: a real fetcher is
-                # non-deterministic, the counted rows must be the written rows
+            if not prev_meta["robots_complete"]:
+                # robots-off history re-opened with robots on: acquire rules
+                # for pending hosts synchronously ONCE; this commit marks the
+                # invariant, later epochs stay on the fast path.
+                # persist-before-count: a real fetcher is non-deterministic,
+                # the counted rows must be the written rows
                 missing = pending.select("host").distinct().join(
                     robots.select("host").distinct(), "host", "left_anti"
                 )
                 boot = fetch_robots(missing, cfg, epoch).persist()
                 n_boot = boot.count()
-                if prev_robots_rows is None:
-                    prev_robots_rows = robots.count()
                 if n_boot:
                     boot_path = os.path.join(
                         cat.stage_path(epoch, "robots_rules"), "bootstrap"
@@ -384,31 +370,15 @@ class CrawlEngine:
         cands = extract_candidates(
             fetched.where(F.col("okp") == 1), cfg, self.n_buckets
         )
-        frontier_keys = frontier.select("url_hash")
-        if self.use_seen_filter:
-            seen = cat.read_snapshot("seen_filter")
-            # slim strategy: Arrow-crosses 16 bytes/candidate (hash only)
-            # instead of the full URL-carrying row, and its url_hash
-            # join-back exchange is the same one flag_new needs.  The
-            # 'broadcast' JVM strategy is measurably WORSE at the default
-            # blob size (engine/seen.py probe_filter docstring) — kept for
-            # small-blob configs only.
-            probed = seenmod.probe_filter(
-                cands, seen, self.n_filter_parts, strategy="slim", key_unique=True
-            )
-            flagged = seenmod.flag_new(probed, frontier_keys).persist()
-        else:
-            seen = None
-            # dropDuplicates for the same duplicate-immunity as
-            # seen.flag_new (left join ≡ left_anti only under key-unique
-            # marker; the dedup reuses the join's url_hash exchange)
-            marker = frontier_keys.dropDuplicates().withColumn("_seen", F.lit(True))
-            flagged = (
-                cands.join(marker, "url_hash", "left")
-                .withColumn("is_new", F.col("_seen").isNull())
-                .drop("_seen")
-                .persist()
-            )
+        seen = cat.read_snapshot("seen_filter")
+        # slim strategy: Arrow-crosses 16 bytes/candidate (hash only)
+        # instead of the full URL-carrying row, and its url_hash join-back
+        # exchange is the same one flag_new needs.  The other strategy,
+        # 'cogroup', is the reference the tests compare slim against.
+        probed = seenmod.probe_filter(
+            cands, seen, self.n_filter_parts, strategy="slim", key_unique=True
+        )
+        flagged = seenmod.flag_new(probed, frontier.select("url_hash")).persist()
         # candidate + insert counts ride the insert write as observation
         # metrics (CollectMetrics above the is_new filter) instead of a
         # dedicated agg job — one fewer full pass over the flagged cache
@@ -455,12 +425,12 @@ class CrawlEngine:
             self._write(new_blobs, sf_path)
             return sf_path
 
-        fut_seen = pool.submit(_timed("seen", write_seen)) if self.use_seen_filter else None
+        fut_seen = pool.submit(_timed("seen", write_seen))
 
         # --- R1 for NEXT epoch's gate: rules for hosts first discovered by
         # this epoch's inserts, committed with this epoch (the
         # robots_complete invariant) ---
-        def robots_delta() -> tuple[int | None, list[str] | None]:
+        def robots_delta() -> tuple[int, list[str] | None]:
             if not self.use_robots:
                 return prev_robots_rows, None
             new_hosts = (
@@ -482,8 +452,7 @@ class CrawlEngine:
                 cpath = os.path.join(cat.stage_path(epoch, "robots_rules"), "compact")
                 self._write(spark.read.schema(ROBOTS_RULES).parquet(*paths), cpath)
                 paths = [cpath]
-            base = prev_robots_rows if prev_robots_rows is not None else 0
-            return base + n, paths
+            return prev_robots_rows + n, paths
 
         fut_robots = pool.submit(_timed("robots_delta", robots_delta))
 
@@ -536,47 +505,23 @@ class CrawlEngine:
             )
         )
 
-        def write_merged() -> tuple[dict, dict, dict]:
+        def write_merged() -> tuple[dict, dict]:
             st, ds = fut_fetch_stats.result(), fut_dis.result()
             touched = set(
                 b for b in set(st["bks"]) | set(ds["bks"]) if b is not None
             )
-            carry_cells: dict = {}
-            if parts is None:
-                # one-time migration of a legacy whole-table snapshot to cells
-                pending_src = frontier.where(
-                    (F.col("status") == "pending") & F.col("host_bucket").isin(touched)
-                )
-                legacy_carry = frontier.where(
-                    (F.col("status") != "pending") | ~F.col("host_bucket").isin(touched)
-                ).select(*cols)
-                base: dict = {}
-            else:
-                pending_src = cat.read_parts(
-                    parts, status="pending", buckets=touched, schema=FRONTIER
-                )
-                if pending_src is None:
-                    pending_src = spark.createDataFrame([], FRONTIER)
-                legacy_carry = None
-                base = {
-                    cell: list(dirs)
-                    for cell, dirs in parts.items()
-                    if not (cell.startswith("pending/") and int(cell.split("/")[1]) in touched)
-                }
-            merged = (
-                pending_src.select(*cols)
-                .join(updates, "url_hash", "left")
-                .withColumn("status", F.coalesce(F.col("new_status"), F.col("status")))
-                .withColumn("retries", F.coalesce(F.col("new_retries"), F.col("retries")))
-                .withColumn("priority", F.coalesce(F.col("new_priority"), F.col("priority")))
-                .drop("new_status", "new_retries", "new_priority")
+            pending_src = cat.read_parts(
+                parts, status="pending", buckets=touched, schema=FRONTIER
             )
-            cells = self._write_status_cells(merged, os.path.join(fr_dir, "cells"))
-            if legacy_carry is not None:
-                carry_cells = self._write_status_cells(
-                    legacy_carry, os.path.join(fr_dir, "carry")
-                )
-            return base, cells, carry_cells
+            if pending_src is None:
+                pending_src = spark.createDataFrame([], FRONTIER)
+            base = {
+                cell: list(dirs)
+                for cell, dirs in parts.items()
+                if not (cell.startswith("pending/") and int(cell.split("/")[1]) in touched)
+            }
+            merged = apply_transitions(pending_src.select(*cols), updates)
+            return base, self._write_status_cells(merged, os.path.join(fr_dir, "cells"))
 
         fut_merged = pool.submit(_timed("merged", write_merged))
 
@@ -584,13 +529,13 @@ class CrawlEngine:
         try:
             stats = fut_fetch_stats.result()
             dis_stats = fut_dis.result()
-            base_parts, merged_cells, carry_cells = fut_merged.result()
+            base_parts, merged_cells = fut_merged.result()
             insert_cells = fut_insert_cells.result()
             ins_stats = ins_obs.get  # fired by the insert_cells write job
             fut_crawl_log.result()
             fut_lineage.result()
             n_robots_rows, new_robots_paths = fut_robots.result()
-            sf_path = fut_seen.result() if fut_seen is not None else None
+            sf_path = fut_seen.result()
         finally:
             pool.shutdown(wait=True)
         _mark("overlap_stats_writes")
@@ -602,16 +547,14 @@ class CrawlEngine:
         n_cands, n_new = int(ins_stats["n_cands"]), int(ins_stats["n"])
 
         # assemble the cell map deterministically on the main thread:
-        # rewritten pending cells REPLACE their dir list, terminal/carry
-        # dirs and insert dirs APPEND
+        # rewritten pending cells REPLACE their dir list, terminal dirs and
+        # insert dirs APPEND
         new_parts = dict(base_parts)
         for (st, b), p in merged_cells.items():
             if st == "pending":
                 new_parts[cat.cell_key("pending", b)] = [p]
             else:
                 new_parts.setdefault(cat.cell_key(st, b), []).append(p)
-        for (st, b), p in carry_cells.items():
-            new_parts.setdefault(cat.cell_key(st, b), []).append(p)
         for b, p in insert_cells.items():
             new_parts.setdefault(cat.cell_key("pending", b), []).append(p)
         new_parts = self._compact_cells(new_parts, fr_dir)
@@ -625,14 +568,12 @@ class CrawlEngine:
             "crawl_log": {"path": crawl_log_path, "rows": n_popped},
             "lineage": {"path": lineage_path, "rows": 1},
         }
-        snapshots: dict = {}
-        if sf_path is not None:
-            snapshots["seen_filter"] = {"path": sf_path, "rows": self.n_filter_parts}
+        snapshots: dict = {"seen_filter": {"path": sf_path, "rows": self.n_filter_parts}}
         if new_robots_paths is not None:
             snapshots["robots_rules"] = {"paths": new_robots_paths, "rows": n_robots_rows}
         elif self.use_robots and robots_paths != orig_robots_paths:
-            # legacy bootstrap extended the committed dirs but no insert
-            # delta followed — still must commit the bootstrap dir
+            # the robots-on bootstrap extended the committed dirs but no
+            # insert delta followed — still must commit the bootstrap dir
             snapshots["robots_rules"] = {"paths": robots_paths, "rows": n_robots_rows}
         _mark("assemble")
 
@@ -640,17 +581,9 @@ class CrawlEngine:
         # pending_end and frontier_rows follow arithmetically from the
         # status-transition semantics (every popped row leaves 'pending'
         # and only retryable failures re-enter; inserts are all pending),
-        # so no post-write table scan is needed.  Falls back to counting
-        # for catalogs committed before this invariant was tracked.
-        frontier_rows = (prev_rows + n_new) if prev_rows is not None else None
-        if prev_pending is not None:
-            pending_end = (
-                prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
-            )
-        else:
-            committed_pending = cat.read_parts(new_parts, status="pending")
-            pending_end = committed_pending.count() if committed_pending is not None else 0
-            frontier_rows = cat.read_parts(new_parts).count()
+        # so no post-write table scan is needed.
+        frontier_rows = prev_rows + n_new
+        pending_end = prev_pending - n_popped - n_disallowed + n_retry_pending + n_new
         wall = time.time() - t0
         metrics = {
             "urls_popped": n_popped,

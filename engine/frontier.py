@@ -58,30 +58,26 @@ def pop_frontier(eligible: DataFrame, salt: int) -> DataFrame:
     )
 
 
-def merge_frontier(frontier: DataFrame, updates: DataFrame, inserts: DataFrame) -> DataFrame:
-    """F7: apply status transitions + insert new pending rows (exactly once).
+def apply_transitions(rows: DataFrame, updates: DataFrame) -> DataFrame:
+    """F7: apply this epoch's status transitions to frontier ``rows``.
 
     ``updates``: (url_hash, new_status, new_retries, new_priority) for rows
-    popped or disallowed this epoch.  ``inserts``: full-schema new rows.
-    Sandbox realization of the Iceberg ``MERGE INTO`` in
-    engine/catalog.py:iceberg_merge_frontier_sql — a left join + coalesce
-    producing the next immutable snapshot (SC5), written partitioned by
-    status so the next epoch's pending scan partition-prunes (O5).
+    popped or disallowed this epoch; rows without an update keep their
+    values.  Sandbox realization of the matched half of the Iceberg
+    ``MERGE INTO`` in engine/catalog.py:iceberg_merge_frontier_sql — a left
+    join + coalesce.  The engine's touched-cell merge (engine/crawl.py
+    ``write_merged``) and the ``frontier_merge`` parity query
+    (analytics/crawl_queries.py) both run this function; new rows are
+    never merged here, they are written as separate pending cells.
     """
-    upd = updates.select(
-        "url_hash",
-        F.col("new_status"),
-        F.col("new_retries"),
-        F.col("new_priority"),
-    )
-    merged = (
-        frontier.join(upd, "url_hash", "left")
+    upd = updates.select("url_hash", "new_status", "new_retries", "new_priority")
+    return (
+        rows.join(upd, "url_hash", "left")
         .withColumn("status", F.coalesce(F.col("new_status"), F.col("status")))
         .withColumn("retries", F.coalesce(F.col("new_retries"), F.col("retries")))
         .withColumn("priority", F.coalesce(F.col("new_priority"), F.col("priority")))
         .drop("new_status", "new_retries", "new_priority")
     )
-    return merged.unionByName(inserts.select(*merged.columns))
 
 
 def retry_transition(fetched: DataFrame, max_retries: int) -> DataFrame:

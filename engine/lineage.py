@@ -8,10 +8,8 @@ which physical partition contributed what to each committed epoch
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from engine.schemas import LINEAGE, METRICS
 
 
 def partition_lineage(
@@ -31,19 +29,10 @@ def partition_lineage(
     )
 
 
-def empty_lineage(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], LINEAGE)
-
-
-def metrics_df(spark: SparkSession, epoch: int, values: dict[str, float]) -> DataFrame:
-    rows = [(epoch, k, float(v)) for k, v in sorted(values.items())]
-    return spark.createDataFrame(rows, METRICS)
-
-
 def write_metrics_parquet(path: str, epoch: int, values: dict[str, float]) -> None:
     """Driver-side metrics append — pyarrow write, zero Spark jobs (the
-    metrics are already scalars on the driver).  Schema mirrors METRICS so
-    ``spark.read.parquet`` unions it with any Spark-written epochs."""
+    metrics are already Python scalars).  Schema mirrors
+    engine.schemas.METRICS."""
     import os
 
     import pyarrow as pa

@@ -24,6 +24,12 @@ SF_TEST = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: multi-epoch crawl or spark-submit tests (tens of seconds each)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = build_session(app_name="tests", master="local[8]", shuffle_partitions=8)

@@ -3159,24 +3159,27 @@ def test_events_ewma_matches_python(spark):
     for r in rows:
         series[r["user_id"]].append((r["t_us"], r["event_id"], r["vc"]))
     want = {}
+    n_terms = []  # weighted terms behind each recomputed event
     for u, evs in series.items():
         evs.sort()
         for idx, (_, eid, _vc) in enumerate(evs):
-            num = den = 0
+            num = den = terms = 0
             for k in range(E.EWMA_K):
                 if idx - k < 0:
                     break
                 wgt = 1 << (E.EWMA_K - 1 - k)
                 num += evs[idx - k][2] * wgt
                 den += wgt
+                terms += 1
             want[eid] = round(num / den, 4)
+            n_terms.append(terms)
     got = {r["event_id"]: r["ewma"] for r in E.events_ewma(spark, SF_TEST).collect()}
     assert set(got) == set(want)
     for eid, v in want.items():
         assert abs(got[eid] - v) <= 1e-4, eid
     # the fixture must exercise both partial leading windows and full ones
-    assert any(len(evs) < E.EWMA_K for evs in series.values()) or True
-    assert any(len(evs) >= E.EWMA_K for evs in series.values())
+    assert any(t < E.EWMA_K for t in n_terms)
+    assert any(t == E.EWMA_K for t in n_terms)
 
 
 def test_host_graph_matches_python(spark):

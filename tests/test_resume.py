@@ -3,10 +3,13 @@ parity on the flaky graph — run on a reduced graph to keep the suite fast."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import stat
 
 from pyspark.sql import functions as F
 
+from engine.catalog import SnapshotCatalog
 from engine.crawl import CrawlEngine
 from engine.synthgraph import GraphConfig, gen_seed_urls
 from pyref.oracle import run_crawl as oracle_run
@@ -114,3 +117,22 @@ def test_robots_off_history_bootstraps_on_reopen(spark, tmp_path):
         for r in cat.read_snapshot("robots_rules").select("host").distinct().collect()
     }
     assert pending_hosts <= rule_hosts, "bootstrap must cover robots-off-era hosts"
+
+
+def test_commit_fsyncs_manifest_dir_after_rename(tmp_path, monkeypatch):
+    """The commit point survives power loss: a rename is durable only once
+    its directory entry is, so ``commit`` must fsync ``manifests/`` after
+    renaming the manifest into it."""
+    cat = SnapshotCatalog(None, str(tmp_path))
+    final = cat._manifest_path(0)
+    manifests_ino = os.stat(os.path.dirname(final)).st_ino
+    real_fsync, calls = os.fsync, []
+
+    def spy(fd):
+        st = os.fstat(fd)
+        calls.append((stat.S_ISDIR(st.st_mode), st.st_ino, os.path.exists(final)))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", spy)
+    cat.commit(0, {}, {})
+    assert (True, manifests_ino, True) in calls, calls

@@ -192,10 +192,10 @@ def test_canonical_fast_path_is_sound():
 
 
 def test_probe_strategies_agree(spark):
-    """broadcast (JVM bit math), slim (hash-only Arrow), and cogroup
-    (reference) probes return the identical maybe_seen verdict for every
-    candidate — including hashes with the sign bit set (the uint64-view
-    parity the broadcast shift/mask arithmetic must reproduce exactly)."""
+    """slim (hash-only Arrow + join-back, the engine's probe) and cogroup
+    (reference) return the identical maybe_seen verdict for every
+    candidate — including hashes with the sign bit set, which the uint64
+    view in ``_positions`` must handle identically on both paths."""
     from engine import seen as seenmod
 
     rng = np.random.default_rng(7)
@@ -212,15 +212,14 @@ def test_probe_strategies_agree(spark):
     )
 
     outs = {}
-    for strat in ("broadcast", "slim", "cogroup"):
+    for strat in ("slim", "cogroup"):
         rows = seenmod.probe_filter(cands, blobs, n_parts, strategy=strat).collect()
         outs[strat] = {r["url_hash"]: r["maybe_seen"] for r in rows}
         assert len(rows) == len(probe_hashes), strat
-    assert outs["broadcast"] == outs["cogroup"]
     assert outs["slim"] == outs["cogroup"]
     # every seeded hash must be maybe_seen (bloom: no false negatives)
     for h in seeds[:1000]:
-        assert outs["broadcast"][int(h)] is True
+        assert outs["slim"][int(h)] is True
     blobs.unpersist()
 
 
