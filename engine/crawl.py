@@ -41,10 +41,12 @@ from engine.lineage import partition_lineage, write_metrics_parquet
 from engine.parse import extract_candidates
 from engine.robots import fetch_robots, robots_gate
 from engine.schemas import (
+    CRAWL_LOG,
     FETCHED_STAGED,
     FRONTIER,
     POLITENESS_BUDGETS,
     ROBOTS_RULES,
+    SEEN_FILTER,
 )
 from engine.seed import seeds_to_frontier
 from engine.synthgraph import GraphConfig, gen_budgets
@@ -370,7 +372,7 @@ class CrawlEngine:
         cands = extract_candidates(
             fetched.where(F.col("okp") == 1), cfg, self.n_buckets
         )
-        seen = cat.read_snapshot("seen_filter")
+        seen = cat.read_snapshot("seen_filter", schema=SEEN_FILTER)
         # slim strategy: Arrow-crosses 16 bytes/candidate (hash only)
         # instead of the full URL-carrying row, and its url_hash join-back
         # exchange is the same one flag_new needs.  The other strategy,
@@ -470,7 +472,11 @@ class CrawlEngine:
             fut_crawl_log.result()
             cell_paths = list(fut_insert_cells.result().values())
             lineage = partition_lineage(
-                spark.read.parquet(crawl_log_path), epoch, "pop", in_snap, out_snap
+                spark.read.schema(CRAWL_LOG).parquet(crawl_log_path),
+                epoch,
+                "pop",
+                in_snap,
+                out_snap,
             ).unionByName(
                 partition_lineage(fetched, epoch, "fetch_parse", in_snap, out_snap)
             )
@@ -661,7 +667,9 @@ class CrawlEngine:
         frag = {c: d for c, d in new_parts.items() if len(d) > self.max_cell_dirs}
         if not frag:
             return new_parts
-        df = self.spark.read.parquet(*[p for dirs in frag.values() for p in dirs])
+        df = self.spark.read.schema(FRONTIER).parquet(
+            *[p for dirs in frag.values() for p in dirs]
+        )
         out = dict(new_parts)
         for cell in frag:
             del out[cell]

@@ -6,6 +6,12 @@
 The zip carries engine/ + analytics/ + pyref/ so executor-side Python
 workers (mapInPandas / applyInPandas closures) can import them on any
 cluster node without a shared filesystem.
+
+It needs no JVM part: the in-process chmod shim
+(``engine/NioLocalFileSystem.java``) is only installed when
+``build_session`` launches a ``local[...]`` JVM itself.  Under
+``spark-submit`` the JVM and its classpath already exist, so a deploy from
+this zip keeps Hadoop's stock local filesystem.
 """
 
 from __future__ import annotations
